@@ -547,9 +547,9 @@ def _e2e_worker(rank, nproc, files, barrier, out_q, write_dir=None):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from eynollah_spark.pipeline import make_partition_arrow_kernel
+    from eynollah_spark.pipeline import emit_flat, make_partition_arrow_kernel
 
-    kern = make_partition_arrow_kernel(include_payload=True, fail_fast=True)
+    kern = make_partition_arrow_kernel(emit_flat, fail_fast=True)
     mine = files[rank::nproc]
     barrier.wait()
     t0 = time.time()

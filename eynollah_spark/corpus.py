@@ -329,15 +329,6 @@ def gen_corpus_flat(n_docs: int, seed: int = 42, start: int = 0):
     return out, metas
 
 
-def corpus_to_pandas(n_docs: int, seed: int = 42, start: int = 0):
-    import pandas as pd
-
-    flat, metas = gen_corpus_flat(n_docs, seed, start)
-    spans = pd.DataFrame(flat)
-    docs = pd.DataFrame(metas)
-    return spans, docs
-
-
 # --------------------------------------------------------------- Spark side --
 
 _FLAT_CORPUS_DDL = (

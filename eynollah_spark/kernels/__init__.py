@@ -3,7 +3,7 @@
 These are the non-relational cores of the pipeline — the symbolic
 re-expression of eynollah's raster heuristics. Each kernel is a pure
 function of small per-document arrays, unit-testable without a
-SparkSession, and is invoked from Arrow-batched pandas UDFs in
+SparkSession, and is invoked from the whole-partition Arrow driver in
 ``eynollah_spark.pipeline``.
 """
 

@@ -93,15 +93,15 @@ def _next_snapshot_id(out_path: str) -> int:
     return max(ids, default=0) + 1
 
 
-def _assignment(out_path: str, as_of: int | None = None) -> dict[int, int]:
-    """part -> serving snapshot id at snapshot `as_of` (None = current):
-    replay the log in id order, last writer <= as_of wins."""
-    assign: dict[int, int] = {}
+def _assignment(out_path: str, as_of: int | None = None) -> dict[int, dict]:
+    """part -> serving snapshot manifest at snapshot `as_of` (None =
+    current): replay the log in id order, last writer <= as_of wins."""
+    assign: dict[int, dict] = {}
     for s in snapshots(out_path):
         if as_of is not None and s["snapshot_id"] > as_of:
             break
         for p in s["parts"]:
-            assign[int(p)] = s["snapshot_id"]
+            assign[int(p)] = s
     return assign
 
 
@@ -110,25 +110,32 @@ def read_as_of(spark: SparkSession, out_path: str,
     """Time-travel read (Iceberg VERSION AS OF contract): the table state
     at `snapshot_id` (None = current). One directory-pruned parquet read
     per serving snapshot — only the part=<p> dirs the assignment
-    references are listed — unioned JVM-side."""
+    references are listed — unioned JVM-side. Raises FileNotFoundError
+    when a part dir is missing although its manifest recorded docs."""
     from functools import reduce
 
     assign = _assignment(out_path, as_of=snapshot_id)
     if not assign:
         raise ValueError(f"no snapshots at or before {snapshot_id!r} in {out_path}")
     by_sid: dict[int, list[int]] = {}
-    for p, sid in assign.items():
-        by_sid.setdefault(sid, []).append(p)
+    for p, snap in assign.items():
+        by_sid.setdefault(snap["snapshot_id"], []).append(p)
     frames = []
     for sid, parts in sorted(by_sid.items()):
-        # ADVICE r5 (medium): run_extraction records EVERY bucket of a
-        # batch in the manifest, but partitionBy materializes no
-        # directory for a bucket that got zero docs — a missing part dir
-        # is an EMPTY relation, not an error. Skip absent paths instead
-        # of letting the reader throw PATH_NOT_FOUND.
-        paths = [pp for p in sorted(parts)
-                 if os.path.isdir(pp := os.path.join(_snap_dir(out_path, sid),
-                                                     f"part={p}"))]
+        # run_extraction records EVERY bucket of a batch in the manifest,
+        # but partitionBy materializes no directory for a bucket that got
+        # zero docs: a missing part dir the manifest recorded as empty is
+        # an EMPTY relation. A missing dir for a bucket the manifest
+        # recorded docs for is lost data, and raises.
+        paths = []
+        for p in sorted(parts):
+            pp = os.path.join(_snap_dir(out_path, sid), f"part={p}")
+            if os.path.isdir(pp):
+                paths.append(pp)
+            elif (docs := assign[p]["parts"][str(p)]["docs"]) > 0:
+                raise FileNotFoundError(
+                    f"snapshot {sid} recorded {docs} docs for part {p}, "
+                    f"but {pp} is missing")
         if paths:
             frames.append(
                 spark.read.option("basePath", _snap_dir(out_path, sid))

@@ -73,12 +73,6 @@ def _attr_int(name: str, value: int) -> bytes:
     return _str_field(1, name) + _varint_field(3, value) + _varint_field(20, 2)
 
 
-def _attr_float(name: str, value: float) -> bytes:
-    # AttributeProto: name=1, f=2 (fixed32), type=20 (FLOAT=1)
-    return (_str_field(1, name) + _tag(2, 5) + struct.pack("<f", value)
-            + _varint_field(20, 1))
-
-
 def _node(op: str, inputs, outputs, attrs: bytes = b"") -> bytes:
     # NodeProto: input=1, output=2, op_type=4, attribute=5
     out = b"".join(_str_field(1, i) for i in inputs)

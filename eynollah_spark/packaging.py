@@ -57,7 +57,8 @@ def build_zip(cache_dir: str | None = None) -> str:
 def ensure_distributed(spark: SparkSession) -> None:
     """Make the package importable on executor python workers (idempotent
     per SparkContext; no-op when the zip was already shipped, e.g. via
-    spark-submit --py-files)."""
+    spark-submit --py-files). If the zip cannot be built (OSError), a
+    local master skips shipping it and any other master re-raises."""
     sc = spark.sparkContext
     key = id(sc)
     if key in _shipped:
@@ -69,7 +70,16 @@ def ensure_distributed(spark: SparkSession) -> None:
         # mkdir inside the zip path)
         _shipped.add(key)
         return
-    zip_path = build_zip()
+    try:
+        zip_path = build_zip()
+    except OSError:
+        # e.g. a read-only source tree. A local[...] master starts its
+        # python workers on this host from the driver's working directory,
+        # so they import the same source tree; any other master needs it.
+        if sc.master != "local" and not sc.master.startswith("local["):
+            raise
+        _shipped.add(key)
+        return
     try:
         # ADVICE r5: match the EXACT content-addressed basename, not any
         # '*eynollah_spark*.zip' — a session that shipped hash A must

@@ -165,3 +165,22 @@ def test_read_as_of_tolerates_empty_buckets(spark, tmp_path):
     empty = read_as_of(spark, out2)
     assert empty.count() == 0
     assert "doc_id" in empty.columns and "part" in empty.columns
+
+
+def test_read_as_of_raises_on_missing_nonempty_part(spark, tmp_path):
+    """A part dir the manifest recorded docs for is lost data: read_as_of
+    must fail loudly instead of serving a silently shorter table (empty
+    buckets, recorded with 0 docs, still read as empty relations)."""
+    import shutil
+
+    from eynollah_spark.manifest import read_as_of, snapshots
+
+    out = str(tmp_path / "lost")
+    docs = nest_corpus(corpus_flat_spark(spark, 20, partitions=2))
+    run_extraction(docs, out, n_parts=4, partitions=2)
+    snap = snapshots(out)[-1]
+    part = next(p for p, m in snap["parts"].items() if m["docs"] > 0)
+    shutil.rmtree(os.path.join(out, "data", f"snap-{snap['snapshot_id']:06d}",
+                               f"part={part}"))
+    with pytest.raises(FileNotFoundError, match=f"part {part}"):
+        read_as_of(spark, out)

@@ -1,13 +1,14 @@
 """End-to-end Spark pipeline gate: distributed corpus -> nested documents
 table -> extract -> span-sequence equality vs the by-construction oracle."""
 
+import glob
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from eynollah_spark.corpus import corpus_flat_spark, expected_spark, nest_corpus
-from eynollah_spark.pipeline import extract, extract_flat_input
+from eynollah_spark.pipeline import extract, extract_flat_input, extract_from_parquet_files
 
 N_DOCS = 200
 
@@ -62,6 +63,36 @@ def test_nested_output_preserves_empty_docs(spark, corpus):
         F.size(F.array_distinct("out_spans.offset")).alias("nd"),
     ).filter(F.col("n") != F.col("nd"))
     assert chk.count() == 0
+
+
+_OUT_COLS = ["doc_id", "ord", "kind", "text", "media_ref", "offset"]
+
+
+def test_entry_points_agree(spark, corpus, tmp_path):
+    """Every extraction entry point runs the one whole-partition driver,
+    so all of them must yield the same (doc_id, ord, kind, text,
+    media_ref, offset) multiset: extract flat, extract nested exploded
+    by position, extract_flat_input under both strategies, and the
+    task-side parquet scan over doc-complete files."""
+    docs = nest_corpus(corpus)
+    flat = corpus.drop("expected_kind", "expected_rank")
+    corpus_dir = str(tmp_path / "corpus")
+    flat.repartition(4, F.xxhash64("doc_id")).write.parquet(corpus_dir)
+    files = sorted(glob.glob(corpus_dir + "/*.parquet"))
+    exploded = (extract(docs, partitions=8, nested=True)
+                .select("doc_id", F.posexplode("out_spans").alias("ord", "s"))
+                .select("doc_id", "ord", "s.kind", "s.text", "s.media_ref", "s.offset"))
+    outs = {
+        "extract_nested": exploded,
+        "flat_input_join": extract_flat_input(flat, partitions=8, strategy="join"),
+        "flat_input_inline": extract_flat_input(flat, partitions=8, strategy="inline"),
+        "parquet_files": extract_from_parquet_files(spark, files, partitions=4),
+    }
+    ref = sorted(map(tuple, extract(docs, partitions=8, nested=False)
+                     .select(_OUT_COLS).collect()))
+    assert len(ref) == expected_spark(corpus).count()
+    for name, df in outs.items():
+        assert sorted(map(tuple, df.select(_OUT_COLS).collect())) == ref, name
 
 
 def test_salted_repartition_isolates_heavy_tail(spark, corpus):
@@ -202,15 +233,16 @@ _CHECK_COLS = ["doc_id", "width", "height", "rtl", "kind", "offset",
 
 def test_expected_check_kernel_equals_join_check(spark, corpus):
     """r6: extract_reading_order's self-check moved inside the kernel
-    (make_expected_check_kernel). The per-doc mismatch count must equal
+    (the driver with emit_check). The per-doc mismatch count must equal
     the r5 full-outer-join formulation exactly — zero on the clean
     corpus, and the same nonzero counts under injected corruption."""
-    from eynollah_spark.pipeline import make_expected_check_kernel
+    from eynollah_spark.pipeline import (
+        CHECK_OUT_SCHEMA, emit_check, make_partition_arrow_kernel)
 
     def kernel_bad(flat):
         return (flat.select(*_CHECK_COLS)
-                .mapInArrow(make_expected_check_kernel(),
-                            schema="doc_id string, n_bad long"))
+                .mapInArrow(make_partition_arrow_kernel(emit_check),
+                            schema=CHECK_OUT_SCHEMA))
 
     def join_bad(flat):
         out = extract_flat_input(flat.drop("expected_kind", "expected_rank"),

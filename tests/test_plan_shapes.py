@@ -58,6 +58,25 @@ def test_extraction_plan_has_single_shuffle(spark):
     assert "CartesianProduct" not in pj and "BroadcastNestedLoop" not in pj
 
 
+def test_extract_plan_has_no_sort_and_no_pandas(spark, tmp_path):
+    """extract() establishes the (doc_id, offset) order inside its one
+    Arrow driver: neither output mode may plan a Sort node (a
+    sortWithinPartitions stage) or a MapInPandas stage."""
+    import re
+
+    from eynollah_spark.corpus import corpus_flat_spark, nest_corpus
+    from eynollah_spark.pipeline import extract
+
+    path = str(tmp_path / "docs")
+    nest_corpus(corpus_flat_spark(spark, 20, partitions=2)).write.parquet(path)
+    docs = spark.read.parquet(path)
+    for nested in (False, True):
+        p = _plan(extract(docs, partitions=4, nested=nested))
+        assert re.search(r"\bSort\b", p) is None, p
+        assert "MapInPandas" not in p, p
+        assert "MapInArrow" in p, p
+
+
 def test_whole_stage_codegen_active(spark):
     load_views(spark, SF_DIR, "lineitem")
     # aggregations sit under AdaptiveSparkPlan pre-execution; the stable

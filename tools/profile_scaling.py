@@ -4,10 +4,8 @@ Launched like bench_worker (own JVM, taskset-pinned) by profile_driver.py.
 Variants isolate which stage stops scaling 8 -> 32 cores:
 
   scan               parquet scan + count only
-  shuffle            scan + repartition(xxhash64) + blackbox passthrough
-  sort               scan + repartition + sortWithinPartitions + blackbox
-  ipc                full plan, kernel replaced by Arrow passthrough
-                     (measures the JVM<->python round trip incl payload)
+  shuffle            scan + repartition(xxhash64) + Arrow passthrough kernel
+                     (the JVM<->python round trip incl payload)
   ipc_narrow         same but text/media_ref dropped before the stage
   full               real kernel, inline payload (bench default, round 1)
   full_narrow        real kernel, payload dropped at scan (include_payload=False)
@@ -25,7 +23,7 @@ def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("--cpus", type=int, required=True)
     ap.add_argument("--corpus", required=True)
-    ap.add_argument("--variants", default="scan,shuffle,sort,ipc,ipc_narrow,full,full_narrow,full_join")
+    ap.add_argument("--variants", default="scan,shuffle,ipc_narrow,full,full_narrow,full_join")
     ap.add_argument("--trials", type=int, default=2)
     ap.add_argument("--batch", type=int, default=0, help="override arrow maxRecordsPerBatch")
     ap.add_argument("--parts-mult", type=int, default=4)
@@ -35,7 +33,7 @@ def main():
 
     from pyspark.sql import functions as F
 
-    from eynollah_spark.pipeline import extract_flat_input, make_arrow_kernel
+    from eynollah_spark.pipeline import extract_flat_input
     from eynollah_spark.session import build_session
 
     spark = build_session(app=f"prof_c{args.cpus}", cpus=args.cpus,
@@ -67,12 +65,7 @@ def main():
             return flat
         df = flat if "narrow" not in variant else flat.select(*narrow_cols)
         df = df.repartition(parts, F.xxhash64("doc_id"))
-        if variant == "shuffle":
-            return df.mapInArrow(passthrough, df.schema)
-        df = df.sortWithinPartitions("doc_id", "offset")
-        if variant == "sort":
-            return df.mapInArrow(passthrough, df.schema)
-        if variant.startswith("ipc"):
+        if variant in ("shuffle", "ipc_narrow"):
             return df.mapInArrow(passthrough, df.schema)
         if variant == "full":
             return extract_flat_input(flat, partitions=parts)
