@@ -8,9 +8,10 @@ Stage plan (explicit shuffle boundaries, SURVEY.md §3.1 lifecycle):
     -> flatten (posexplode, narrow — preserves partitioning)
     -> mapInArrow(make_partition_arrow_kernel), the one driver: one Arrow
        sort of the resident partition by (doc_id, offset), one layout
-       kernel call per document, then one emitter builds the output —
-       emit_flat, emit_narrow (no payload), emit_nested (a list of spans
-       per doc) or emit_check (the extract_reading_order self-check)
+       kernel call per document, then one emitter builds the output in
+       bounded doc-aligned batches — emit_flat, emit_narrow (no payload),
+       emit_nested (a list of spans per doc) or emit_check (the
+       extract_reading_order self-check)
     -> sink (nested or flat rows; strategy='join' keeps payload out of
        the kernel stage entirely and joins it back JVM-side)
 
@@ -30,7 +31,8 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from eynollah_spark.kernels.layout import DocSpans, layout_permutation
-from eynollah_spark.schemas import FLAT_IN_FIELDS, FLAT_OUT_SCHEMA, OUT_SCHEMA
+from eynollah_spark.schemas import (
+    CHECK_OUT_SCHEMA, FLAT_IN_FIELDS, FLAT_OUT_SCHEMA, NARROW_OUT_SCHEMA, OUT_SCHEMA)
 
 #: input columns the kernel needs (the narrow projection: no payload)
 _SCAN_COLS_NARROW = ["doc_id", "width", "height", "rtl", "kind",
@@ -61,8 +63,8 @@ def salted_repartition(df: DataFrame, partitions: int, heavy_quantile: float = H
     clusters where each node brings its own bandwidth; 'auto' = estimate
     the p-`heavy_quantile` cutoff from a small TABLESAMPLE (reads a
     fraction of the input, never a full extra pass)."""
-    width = 64 * partitions
     if heavy_threshold is None:
+        width = 64 * partitions
         return df.repartition(
             2 * partitions,
             F.pmod(F.xxhash64("doc_id"), F.lit(width)).cast("int"))
@@ -88,6 +90,7 @@ def salted_repartition(df: DataFrame, partitions: int, heavy_quantile: float = H
     # heavy docs that collides under the light hash cannot also collide
     # under the heavy one; partitions are mixed heavy+light, and the
     # balance comes from the id spread, not from heavy isolation.
+    width = 64 * partitions
     bucket = F.when(
         F.col("_n") > heavy_threshold,
         F.lit(width) + F.pmod(F.xxhash64("doc_id", F.lit(1)), F.lit(width)),
@@ -160,14 +163,31 @@ def flatten(df: DataFrame) -> DataFrame:
     )
 
 
+#: bounds of one output batch: the driver emits a partition's documents
+#: in doc-aligned slices of at most this many spans or payload bytes (plus
+#: one document), so no output string array nears the 2 GiB its int32
+#: offsets can address, however large the partition
+OUT_BATCH_ROWS = 1 << 16
+OUT_BATCH_BYTES = 1 << 28
+
+#: a string column of this many bytes or more is widened to large_string
+#: before the sort: Arrow's take concatenates a column's chunks first, and
+#: a string array's int32 offsets address less than 2 GiB
+WIDEN_BYTES = 1 << 30
+
+_PAYLOAD = ("text", "media_ref")
+
+
 class PartitionOrder(NamedTuple):
-    """The reading order of one sorted partition, as the driver hands it
-    to an emitter. Output row j (documents in partition order, each one's
-    spans in reading order) is row ``take[j]`` of ``table``, at position
-    ``ords[j]`` of its document; ``marg[j]`` flags a span whose kind
-    refines to 'marginalia'. ``first`` and ``n_out`` hold, per document
-    (empty ones included), its first row in ``table`` and its number of
-    output spans."""
+    """A doc-aligned slice of one sorted partition's reading order, as the
+    driver hands it to an emitter. Output row j (documents in partition
+    order, each one's spans in reading order) is row ``take[j]`` of
+    ``table``, at position ``ords[j]`` of its document; ``marg[j]`` flags a
+    span whose kind refines to 'marginalia'. ``first`` and ``n_out`` hold,
+    per document of the slice (empty ones included), its first row in
+    ``table`` and its number of output spans. ``table`` is the whole
+    sorted partition (string columns of WIDEN_BYTES or more as
+    large_string)."""
 
     table: pa.RecordBatch
     first: np.ndarray
@@ -192,19 +212,25 @@ def _safe_permutation(d: DocSpans, fail_fast: bool):
         return perm, np.zeros(len(perm), dtype=bool)
 
 
+def _take_str(col: pa.Array, idx) -> pa.Array:
+    """Rows ``idx`` of a string or large_string column, as string (an
+    output slice's strings are bounded; see OUT_BATCH_BYTES)."""
+    return pc.cast(pc.take(col, idx), pa.string())
+
+
 def _span_columns(o: PartitionOrder, payload: bool) -> dict:
     """The ordered output columns, built C++-side with pc.take / pc.if_else:
     the text / media_ref payload never materializes as Python objects."""
     t = o.table
     cols = {
-        "doc_id": pc.take(t.column("doc_id"), o.take),
+        "doc_id": _take_str(t.column("doc_id"), o.take),
         "ord": o.ords,
         "kind": pc.if_else(o.marg, pa.scalar("marginalia"),
-                           pc.cast(pc.take(t.column("kind"), o.take), pa.string())),
+                           _take_str(t.column("kind"), o.take)),
     }
     if payload:
-        cols["text"] = pc.take(t.column("text"), o.take)
-        cols["media_ref"] = pc.take(t.column("media_ref"), o.take)
+        for c in _PAYLOAD:
+            cols[c] = _take_str(t.column(c), o.take)
     cols["offset"] = pc.cast(pc.take(t.column("offset"), o.take), pa.int32())
     return cols
 
@@ -228,7 +254,7 @@ def emit_nested(o: PartitionOrder) -> pa.RecordBatch:
     spans = pa.StructArray.from_arrays([cols[c] for c in names], names=names)
     offsets = pa.array(np.concatenate(([0], np.cumsum(o.n_out))), type=pa.int32())
     return pa.RecordBatch.from_pydict({
-        "doc_id": pc.take(o.table.column("doc_id"), pa.array(o.first)),
+        "doc_id": _take_str(o.table.column("doc_id"), pa.array(o.first)),
         "out_spans": pa.ListArray.from_arrays(offsets, spans),
     })
 
@@ -250,7 +276,7 @@ def emit_check(o: PartitionOrder) -> pa.RecordBatch:
     cols = _span_columns(o, payload=False)
     t = o.table
     erank = pc.fill_null(pc.cast(pc.take(t.column("expected_rank"), o.take), pa.int32()), -1)
-    ekind = pc.cast(pc.take(t.column("expected_kind"), o.take), pa.string())
+    ekind = _take_str(t.column("expected_kind"), o.take)
     bad = pc.or_(pc.not_equal(cols["ord"], erank),
                  pc.fill_null(pc.not_equal(cols["kind"], ekind), True))
     doc = np.repeat(np.arange(len(o.n_out)), o.n_out)
@@ -258,19 +284,29 @@ def emit_check(o: PartitionOrder) -> pa.RecordBatch:
                         minlength=len(o.n_out)).astype(np.int64)
     has = o.n_out > 0
     return pa.RecordBatch.from_pydict({
-        "doc_id": pc.take(t.column("doc_id"), pa.array(o.first[has])),
+        "doc_id": _take_str(t.column("doc_id"), pa.array(o.first[has])),
         "n_bad": pa.array(n_bad[has], type=pa.int64()),
     })
 
 
-#: output schemas of the narrow and check emitters (flat and nested use
-#: schemas.FLAT_OUT_SCHEMA / schemas.OUT_SCHEMA)
-NARROW_OUT_SCHEMA = "doc_id string, ord int, kind string, offset int"
-CHECK_OUT_SCHEMA = "doc_id string, n_bad long"
+# each emitter's output schema, for the mapInArrow that runs it
+emit_flat.schema = FLAT_OUT_SCHEMA
+emit_narrow.schema = NARROW_OUT_SCHEMA
+emit_nested.schema = OUT_SCHEMA
+emit_check.schema = CHECK_OUT_SCHEMA
 
 
 def _np(col, fill, dtype) -> np.ndarray:
     return pc.fill_null(col, fill).to_numpy(zero_copy_only=False).astype(dtype)
+
+
+def _widen(t: pa.Table) -> pa.Table:
+    """String columns of WIDEN_BYTES or more as large_string (int64
+    offsets; the data buffer is not copied)."""
+    for i, f in enumerate(t.schema):
+        if f.type == pa.string() and t.column(i).nbytes >= WIDEN_BYTES:
+            t = t.set_column(i, f.name, t.column(i).cast(pa.large_string()))
+    return t
 
 
 def make_partition_arrow_kernel(emit, fail_fast: bool = True,
@@ -279,8 +315,9 @@ def make_partition_arrow_kernel(emit, fail_fast: bool = True,
     concatenates the task's Arrow batches, sorts them once by
     (doc_id, offset) (the canonical order that makes the output
     bitwise-deterministic), runs _safe_permutation once per document run
-    and hands the partition's reading order to ``emit`` (emit_flat,
-    emit_narrow, emit_nested or emit_check), which builds one batch.
+    and hands the reading order to ``emit`` (emit_flat, emit_narrow,
+    emit_nested or emit_check) in doc-aligned slices bounded by
+    OUT_BATCH_ROWS / OUT_BATCH_BYTES, one output batch per slice.
 
     The input must be doc-complete per partition, not sorted: the Arrow
     sort costs ~0.1 s per 300k-row partition, far less than a Tungsten
@@ -290,17 +327,22 @@ def make_partition_arrow_kernel(emit, fail_fast: bool = True,
     dictionary codes; the kernel never sees the payload strings."""
 
     def kernel(batches):
-        tabs = list(batches)
-        n = sum(b.num_rows for b in tabs)
-        if n == 0:
+        tabs = [b for b in batches if b.num_rows]
+        if not tabs:
             return
-        t = pa.Table.from_batches(tabs).combine_chunks()
+        t = _widen(pa.Table.from_batches(tabs))
         del tabs
+        keys = t.select(["doc_id", "offset"]).combine_chunks()  # sorts 2x faster
         t = pc.take(t, pc.sort_indices(
-            t, sort_keys=[("doc_id", "ascending"), ("offset", "ascending")]))
-        # combined, every column is one chunk: the table is one batch
-        t = t.combine_chunks().to_batches()[0]
-        ids = pc.dictionary_encode(t.column("doc_id")).indices.to_numpy(zero_copy_only=False)
+            keys, sort_keys=[("doc_id", "ascending"), ("offset", "ascending")]))
+        # after _widen every column combines into exactly one chunk: Arrow
+        # splits only string / binary columns, and only at 2 GiB
+        (t,) = t.combine_chunks().to_batches()
+        n = t.num_rows
+        doc = t.column("doc_id")
+        first = np.concatenate(
+            ([0], np.flatnonzero(_np(pc.not_equal(doc[1:], doc[:-1]), False, np.bool_)) + 1))
+        last = np.append(first[1:], n)
         kd = pc.dictionary_encode(t.column("kind"))  # null kind -> code -1 -> None
         kind = np.asarray(kd.dictionary.to_pylist() + [None], dtype=object)[
             _np(kd.indices, -1, np.int64)]
@@ -309,32 +351,40 @@ def make_partition_arrow_kernel(emit, fail_fast: bool = True,
         x0, x1, y0, y1 = (_np(t.column(c), 0, np.float64) for c in ("x0", "x1", "y0", "y1"))
         W, H = (_np(t.column(c), 1, np.int64) for c in ("width", "height"))
         RT = _np(t.column("rtl"), False, np.bool_)
-        first = np.concatenate(([0], np.flatnonzero(ids[1:] != ids[:-1]) + 1))
+        nbytes = np.zeros(n + 1, dtype=np.int64)  # payload bytes before row i
+        for c in _PAYLOAD:
+            if c in t.schema.names:
+                nbytes[1:] += np.cumsum(_np(pc.binary_length(t.column(c)), 0, np.int64))
         n_out = np.zeros(len(first), dtype=np.int64)
-        take_l, marg_l = [np.zeros(0, np.int64)], [np.zeros(0, np.bool_)]
-        for k, (s, e) in enumerate(zip(first, np.append(first[1:], n))):
+        lo, rows, take_l, marg_l = 0, 0, [], []
+        for k, (s, e) in enumerate(zip(first, last)):
             v = valid[s:e]
-            if not v.any():
-                continue  # empty document: no spans to order
-            idx = np.arange(s, e) if v.all() else s + np.flatnonzero(v)
-            d = DocSpans(
-                kind=kind[idx], text=None, media_ref=None,
-                offset=offs[idx], x0=x0[idx], x1=x1[idx], y0=y0[idx], y1=y1[idx],
-                width=int(W[s]), height=int(H[s]), rtl=bool(RT[s]),
-                num_col_lower=num_col_lower, num_col_upper=num_col_upper,
-            )
-            perm, marg = _safe_permutation(d, fail_fast)
-            take_l.append(idx[perm])
-            marg_l.append(marg)
-            n_out[k] = len(perm)
-        ords = np.arange(n_out.sum()) - np.repeat(np.cumsum(n_out) - n_out, n_out)
-        out = emit(PartitionOrder(
-            table=t, first=first, n_out=n_out,
-            take=pa.array(np.concatenate(take_l), type=pa.int64()),
-            ords=pa.array(ords, type=pa.int32()),
-            marg=pa.array(np.concatenate(marg_l), type=pa.bool_())))
-        if out.num_rows:
-            yield out
+            if v.any():
+                idx = np.arange(s, e) if v.all() else s + np.flatnonzero(v)
+                d = DocSpans(
+                    kind=kind[idx], text=None, media_ref=None,
+                    offset=offs[idx], x0=x0[idx], x1=x1[idx], y0=y0[idx], y1=y1[idx],
+                    width=int(W[s]), height=int(H[s]), rtl=bool(RT[s]),
+                    num_col_lower=num_col_lower, num_col_upper=num_col_upper,
+                )
+                perm, marg = _safe_permutation(d, fail_fast)
+                take_l.append(idx[perm])
+                marg_l.append(marg)
+                n_out[k] = len(perm)
+                rows += len(perm)
+            if (e < n and rows < OUT_BATCH_ROWS
+                    and nbytes[e] - nbytes[first[lo]] < OUT_BATCH_BYTES):
+                continue
+            m = n_out[lo:k + 1]
+            out = emit(PartitionOrder(
+                table=t, first=first[lo:k + 1], n_out=m,
+                take=pa.array(np.concatenate([np.zeros(0, np.int64)] + take_l)),
+                ords=pa.array(np.arange(m.sum()) - np.repeat(np.cumsum(m) - m, m),
+                              type=pa.int32()),
+                marg=pa.array(np.concatenate([np.zeros(0, np.bool_)] + marg_l))))
+            if out.num_rows:
+                yield out
+            lo, rows, take_l, marg_l = k + 1, 0, [], []
 
     return kernel
 
@@ -371,10 +421,10 @@ def extract(df: DataFrame, partitions: int | None = None, nested: bool = True,
         # CLI's page-extraction step; --ignore-page-extraction skips it)
         flat = filter_printspace(flat, margin_frac=printspace_margin,
                                  keep_null_spans=True)
-    emit, schema = (emit_nested, OUT_SCHEMA) if nested else (emit_flat, FLAT_OUT_SCHEMA)
+    emit = emit_nested if nested else emit_flat
     return flat.mapInArrow(
         make_partition_arrow_kernel(emit, fail_fast=fail_fast, num_col_lower=num_col_lower,
-                                    num_col_upper=num_col_upper), schema=schema)
+                                    num_col_upper=num_col_upper), schema=emit.schema)
 
 
 def extract_flat_input(flat: DataFrame, partitions: int | None = None,
@@ -402,14 +452,13 @@ def extract_flat_input(flat: DataFrame, partitions: int | None = None,
     """
     partitions = _distributed_partitions(flat.sparkSession, partitions)
     join = strategy == "join"
+    emit = emit_narrow if join else emit_flat
     f = flat.select(*(_SCAN_COLS_NARROW if join else FLAT_IN_FIELDS))
     if not assume_doc_partitioned:
         f = f.repartition(partitions, F.xxhash64("doc_id"))
     out = f.mapInArrow(
-        make_partition_arrow_kernel(emit_narrow if join else emit_flat, fail_fast=fail_fast,
-                                    num_col_lower=num_col_lower,
-                                    num_col_upper=num_col_upper),
-        schema=NARROW_OUT_SCHEMA if join else FLAT_OUT_SCHEMA)
+        make_partition_arrow_kernel(emit, fail_fast=fail_fast, num_col_lower=num_col_lower,
+                                    num_col_upper=num_col_upper), schema=emit.schema)
     if not join:
         return out
     payload = flat.select("doc_id", "offset", "text", "media_ref")
@@ -450,7 +499,7 @@ def extract_from_parquet_files(spark, paths: list[str], partitions: int | None =
     paths = sorted(paths)
     ntasks = min(len(paths), max(partitions, 1))
     full = include_payload or write_dir is not None
-    cols = _SCAN_COLS_NARROW + (["text", "media_ref"] if full else [])
+    cols = _SCAN_COLS_NARROW + (list(_PAYLOAD) if full else [])
 
     def gen(batches):
         import os
@@ -468,15 +517,21 @@ def extract_from_parquet_files(spark, paths: list[str], partitions: int | None =
                     outs = list(kern(iter(t.to_batches())))
                     if write_dir is not None and outs:
                         # task-side columnar WRITE (the sink mirror of the
-                        # task-side scan): the full ordered output lands as
-                        # one doc-complete file per input file. Commit
-                        # protocol: write under an attempt-unique temp
-                        # name, then os.replace — atomic on POSIX, so a
-                        # killed or speculative duplicate attempt never
-                        # leaves a truncated file at the final path (a
-                        # loser's replace rewrites identical bytes). On an
-                        # object store the analogue is PUT-to-temp-key +
-                        # manifest commit.
+                        # task-side scan): the full ordered output lands
+                        # as one doc-complete file per input file. At
+                        # 100 TB this is the object-store write the job
+                        # actually ships, with a manifest row per file
+                        # for resume. Commit protocol: write
+                        # under an attempt-unique temp name, then
+                        # os.replace — atomic on POSIX, so a killed or
+                        # speculative duplicate attempt can never leave a
+                        # truncated file at the final path (a loser's
+                        # replace rewrites identical doc-complete bytes).
+                        # On an object store, PUT is already atomic; the
+                        # analogue is PUT-to-temp-key + manifest commit,
+                        # and verify_written checks the manifest either
+                        # way. Disable speculation for belt-and-braces
+                        # (spark.speculation=false is the default).
                         final = f"{write_dir}/part-{int(tid)}-{k}.parquet"
                         tmp = f"{final}.tmp-{os.getpid()}-{uuid.uuid4().hex[:8]}"
                         pq.write_table(pa.Table.from_batches(outs), tmp)
@@ -493,7 +548,7 @@ def extract_from_parquet_files(spark, paths: list[str], partitions: int | None =
                         [pa.array([n_task], type=pa.int64())], names=["n_rows"])
 
     out_schema = ("n_rows long" if stats_only
-                  else FLAT_OUT_SCHEMA if include_payload else NARROW_OUT_SCHEMA)
+                  else emit_flat.schema if include_payload else emit_narrow.schema)
     if ntasks == 0:
         # empty file list (wrong glob, or a fully-resumed manifest):
         # an empty result, not spark.range(...)'s opaque JVM error

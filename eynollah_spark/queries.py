@@ -1514,15 +1514,14 @@ def _extract_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from eynollah_spark.corpus import corpus_flat_spark
-    from eynollah_spark.pipeline import (
-        CHECK_OUT_SCHEMA, emit_check, make_partition_arrow_kernel)
+    from eynollah_spark.pipeline import emit_check, make_partition_arrow_kernel
 
     n = max(200, int(100_000 * sf_of(sf_dir)))
     flat = corpus_flat_spark(spark, n)
     per_doc = flat.select(
         "doc_id", "width", "height", "rtl", "kind", "offset",
         "x0", "x1", "y0", "y1", "expected_kind", "expected_rank",
-    ).mapInArrow(make_partition_arrow_kernel(emit_check), schema=CHECK_OUT_SCHEMA)
+    ).mapInArrow(make_partition_arrow_kernel(emit_check), schema=emit_check.schema)
     bucket = (F.substring("doc_id", 4, 8).cast("int") % 10)
     return (per_doc.groupBy(bucket.alias("bucket"))
             .agg(F.sum("n_bad").cast("bigint").alias("n_bad")))

@@ -49,6 +49,22 @@ FLAT_OUT_SCHEMA = T.StructType([
     T.StructField("offset", T.IntegerType()),
 ])
 
+# flat output without the payload (doc_id, ord, kind, offset): the
+# permutation alone, for plans that join text / media_ref back JVM-side
+NARROW_OUT_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.StringType()),
+    T.StructField("ord", T.IntegerType()),
+    T.StructField("kind", T.StringType()),
+    T.StructField("offset", T.IntegerType()),
+])
+
+# extract_reading_order self-check: per document, spans whose extracted
+# (ord, kind) disagrees with the generator's by-construction order
+CHECK_OUT_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.StringType()),
+    T.StructField("n_bad", T.LongType()),
+])
+
 # flat exploded input (internal stage shape between flatten and the kernel)
 FLAT_IN_FIELDS = [
     "doc_id", "width", "height", "rtl",

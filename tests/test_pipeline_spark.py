@@ -236,13 +236,12 @@ def test_expected_check_kernel_equals_join_check(spark, corpus):
     (the driver with emit_check). The per-doc mismatch count must equal
     the r5 full-outer-join formulation exactly — zero on the clean
     corpus, and the same nonzero counts under injected corruption."""
-    from eynollah_spark.pipeline import (
-        CHECK_OUT_SCHEMA, emit_check, make_partition_arrow_kernel)
+    from eynollah_spark.pipeline import emit_check, make_partition_arrow_kernel
 
     def kernel_bad(flat):
         return (flat.select(*_CHECK_COLS)
                 .mapInArrow(make_partition_arrow_kernel(emit_check),
-                            schema=CHECK_OUT_SCHEMA))
+                            schema=emit_check.schema))
 
     def join_bad(flat):
         out = extract_flat_input(flat.drop("expected_kind", "expected_rank"),
