@@ -80,47 +80,9 @@ def ensure_corpus(n_docs: int) -> str:
     return path
 
 
-def ensure_skew_corpus(n_docs: int) -> str:
-    """Skew-stress corpus (VERDICT r4 item 6 / SURVEY risk register):
-    the standard corpus with a deterministic 1% heavy tail inflated to
-    ~10^4 spans per heavy doc (replicated spans, y-staggered down the
-    page) — the media-heavy-document regime salted_repartition exists
-    for. NESTED shape, since the salting operates on the nested scan."""
-    path = os.path.join(CACHE, f"bench_skew_{n_docs}_{_gen_fingerprint()}")
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    log(f"generating skew corpus ({n_docs} docs, 1% tail @ ~1e4 spans) -> {path}")
-    from pyspark.sql import functions as F
-
-    from eynollah_spark.corpus import corpus_flat_spark, nest_corpus
-    from eynollah_spark.session import build_session
-
-    spark = build_session(app="bench_skew_gen",
-                          cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
-    flat = (corpus_flat_spark(spark, n_docs)
-            .drop("expected_kind", "expected_rank")
-            .filter(F.col("offset") >= 0))
-    heavy_ids = F.pmod(F.xxhash64("doc_id"), F.lit(100)) == 0
-    # per-doc replication factor targets ~1e4 spans whatever the doc's
-    # base span count (window count is fine here: one-time generation)
-    heavy = (flat.filter(heavy_ids)
-             .withColumn("_n", F.expr("COUNT(*) OVER (PARTITION BY doc_id)"))
-             .withColumn("rep", F.explode(F.expr(
-                 "sequence(1, CAST(GREATEST(1, 10000 DIV _n) AS INT))")))
-             .withColumn("offset", F.col("offset") + F.col("rep") * 100000)
-             .withColumn("y0", (F.col("y0") + F.col("rep") * 37) % (F.col("height") - 40))
-             .withColumn("y1", F.col("y0") + 24)
-             .drop("_n", "rep"))
-    nested = nest_corpus(flat.unionByName(heavy))
-    nested.repartition(64).write.mode("overwrite").parquet(path)
-    spark.stop()
-    return path
-
-
 def run_worker(cpus: int, corpus: str | None, sf_dir: str | None, queries: str,
                zip_path: str, presorted: bool = False, trials: int = 1,
-               with_control: bool = False, bucketize: bool = False,
-               skew_nested: str | None = None) -> dict:
+               with_control: bool = False, bucketize: bool = False) -> dict:
     args = ["--cpus", str(cpus), "--trials", str(trials)]
     if corpus:
         args += ["--corpus", corpus]
@@ -130,8 +92,6 @@ def run_worker(cpus: int, corpus: str | None, sf_dir: str | None, queries: str,
         args += ["--bucketize"]
     if with_control:
         args += ["--with-control"]
-    if skew_nested:
-        args += ["--skew-nested", skew_nested]
     if sf_dir and queries:
         args += ["--sf-dir", sf_dir, "--queries", queries]
     worker = os.path.join(REPO, "eynollah_spark", "bench_worker.py")
@@ -297,26 +257,6 @@ def _bucketing_section(res: dict) -> list[str]:
     return lines
 
 
-def _skew_section(res: dict) -> list[str]:
-    sk = res.get("skew_stress") or {}
-    if not sk:
-        return []
-    lines = [
-        "Skew stress (1% of docs inflated to ~10^4 spans — the media-heavy "
-        "regime in the SURVEY risk register; identical output checksums "
-        "salted vs unsalted, asserted in-worker):",
-    ]
-    for c, v in sorted(sk.items(), key=lambda t: int(t[0])):
-        lines.append(
-            f"- {c} cores ({v['n_docs']} docs): best walls salted "
-            f"{v['salted_wall_sec']} s / unsalted {v['unsalted_wall_sec']} s; "
-            f"salting speedup {v['salting_speedup']}× (median of the "
-            f"same-window per-trial unsalted/salted ratios "
-            f"{v.get('pair_ratios')}; all walls {v['walls']})")
-    lines.append("")
-    return lines
-
-
 def _sf1_section() -> list[str]:
     path = os.path.join(CACHE, "sf1_run.json")
     if not os.path.exists(path):
@@ -414,7 +354,6 @@ def update_bench_md(res: dict):
         "",
         *_weak_scaling_section(res),
         *_bucketing_section(res),
-        *_skew_section(res),
         *_sf1_section(),
         "CPU-confinement policy: every measured process tree — each Spark "
         "worker JVM (taskset) AND every control worker (sched_setaffinity) — "
@@ -740,31 +679,6 @@ def main():
                                  (b["extract_wall_sec"] / 2), 3)
                            for a, b in cand],
         }
-    # skew-stress (VERDICT r4 item 6): salted vs unsalted walls on the
-    # 1%-heavy-tail nested corpus, both levels, same JVM per level
-    skew = {}
-    if os.environ.get("SPARK_GRAFT_BENCH_SKEW", "1") != "0":
-        skew_n = int(os.environ.get("SPARK_GRAFT_BENCH_SKEW_DOCS", "10000"))
-        skew_corpus = ensure_skew_corpus(skew_n)
-        for c in (lo, cpus):
-            r = run_worker(c, None, None, "", zip_path, trials=3,
-                           skew_nested=skew_corpus)
-            pr = sorted(r.get("skew_pair_ratios") or [])
-            # headline from the MEDIAN same-window pair (each trial runs
-            # both variants adjacent in one steal window); min-wall vs
-            # min-wall crosses windows and pits a stolen run of one
-            # variant against a clean run of the other (r5 artifact)
-            med = pr[len(pr) // 2] if pr else round(
-                r["skew_unsalted_wall_sec"] / r["skew_salted_wall_sec"], 3)
-            skew[c] = {
-                "n_docs": r["skew_n_docs"],
-                "salted_wall_sec": r["skew_salted_wall_sec"],
-                "unsalted_wall_sec": r["skew_unsalted_wall_sec"],
-                "salting_speedup": med,
-                "pair_ratios": r.get("skew_pair_ratios"),
-                "walls": r["skew_walls"],
-            }
-
     # sf1 confidence run (VERDICT r4 item 7, opt-in — ~10x the bench
     # corpus): flagship bucketed extraction at 1M docs with the driver
     # JVM's memory high-water mark; cached so BENCH.md keeps the note
@@ -835,7 +749,6 @@ def main():
         "via_spark_submit": shutil.which("spark-submit") is not None or True,
         "bucketing_ingest": bucketing,
         "weak_scaling": weak,
-        "skew_stress": skew,
     }
     # break-even: N extractions amortize one bucketing (the bucketing
     # shuffle costs W_b once; each bucketed extraction saves
@@ -877,7 +790,6 @@ def main():
     compact["bucketing_break_even_runs"] = res.get("bucketing_break_even_runs")
     compact["spark_vs_e2e_control"] = res["spark_vs_e2e_control"]
     compact["spark_vs_e2e_pair_ratios"] = res["spark_vs_e2e_pair_ratios"]
-    compact["skew_stress"] = res.get("skew_stress")
     compact["driver_rss_mb"] = {
         "jvm_vmhwm_mb": levels[1].get("jvm_vmhwm_mb"),
         "py_driver_maxrss_mb": levels[1].get("py_driver_maxrss_mb"),

@@ -14,6 +14,10 @@ import os
 import sys
 import time
 
+#: the checkout root: bench_worker.py is always a real file (even under
+#: spark-submit --py-files only the library zip is archived)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def main():
     ap = argparse.ArgumentParser()
@@ -27,12 +31,6 @@ def main():
     ap.add_argument("--with-control", action="store_true",
                     help="alternate an e2e hardware-control sample after every "
                          "Spark trial (same ~40s steal window -> honest pair ratios)")
-    ap.add_argument("--skew-nested", default=None,
-                    help="skew-stress mode (VERDICT r4 item 6): path to a NESTED "
-                         "docs parquet with a heavy span-count tail; times the "
-                         "nested extract() twice per trial — salted (default "
-                         "heavy_threshold) vs unsalted (threshold=2^30) — in "
-                         "the same JVM/steal window")
     ap.add_argument("--trials", type=int, default=1)
     ap.add_argument("--sf-dir", default=None, help="run headline queries against this dir")
     ap.add_argument("--queries", default="", help="comma-separated query names")
@@ -140,14 +138,10 @@ def main():
             with — both sides see the same co-tenant steal window."""
             import subprocess
 
-            # bench_worker.py is always a real file (even under
-            # spark-submit --py-files only the LIBRARY zip is archived),
-            # so the repo root is derivable — never hardcode it
-            repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
             env = dict(os.environ,
                        SPARK_GRAFT_E2E_OUT="/dev/shm/eynollah_bench_out/ctl")
             p = subprocess.run(
-                [sys.executable, os.path.join(repo, "tools", "e2e_control_cli.py"),
+                [sys.executable, os.path.join(REPO, "tools", "e2e_control_cli.py"),
                  args.corpus, str(args.cpus), str(n_docs)],
                 capture_output=True, text=True, timeout=600, env=env)
             for line in p.stdout.splitlines():
@@ -179,54 +173,8 @@ def main():
                            "pair_ratios": pair,
                            "best_pair_ratio": max(pair)})
 
-
-    if args.skew_nested:
-        from eynollah_spark.pipeline import extract
-
-        docs = spark.read.parquet(args.skew_nested)
-        n_docs_sk = docs.count()
-        # both plans built once, untimed; identical work except the
-        # repartition key space (salted isolates the heavy tail into its
-        # own hash space so a 10^4-span doc never piles onto a partition
-        # already holding other heavy docs)
-        def _agg(df):
-            return df.select(
-                F.count("*").alias("rows"),
-                F.expr("bit_xor(xxhash64(doc_id, ord, kind, offset))").alias("checksum"))
-
-        salted_df = _agg(extract(docs, partitions=args.cpus * 4, nested=False,
-                                 fail_fast=False))
-        unsalted_df = _agg(extract(docs, partitions=args.cpus * 4, nested=False,
-                                   fail_fast=False, heavy_threshold=1 << 30))
-        walls = {"salted": [], "unsalted": []}
-        cks = {}
-        for k in range(args.trials):
-            # alternate which variant runs first: the first job of a JVM
-            # pays worker warmup and the freshest steal — fixed ordering
-            # biased the comparison by ~20% (measured r5)
-            pair = (("salted", salted_df), ("unsalted", unsalted_df))
-            for name, df in (pair if k % 2 == 0 else pair[::-1]):
-                t0 = time.time()
-                row = df.first()
-                walls[name].append(round(time.time() - t0, 3))
-                cks[name] = int(row["checksum"])
-        assert cks["salted"] == cks["unsalted"], cks  # salting never changes output
-        # per-trial ratios: both variants of trial k ran adjacent in one
-        # steal window, so unsalted/salted per trial is the same-window
-        # comparison (min-wall-vs-min-wall crosses windows and can pit a
-        # stolen salted trial against a clean unsalted one)
-        pair_ratios = [round(u / s, 3)
-                       for s, u in zip(walls["salted"], walls["unsalted"])]
-        result.update({
-            "skew_n_docs": n_docs_sk,
-            "skew_salted_wall_sec": min(walls["salted"]),
-            "skew_unsalted_wall_sec": min(walls["unsalted"]),
-            "skew_pair_ratios": pair_ratios,
-            "skew_walls": walls,
-        })
-
     if args.sf_dir and args.queries:
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, REPO)
         import __spark_entry__ as entrymod
 
         qs = entrymod.queries()

@@ -235,7 +235,7 @@ def _gen_media_interleaved(b, rng, W, H):
 
 
 def _gen_media_heavy(b, rng, W, H, doc_index):
-    # Zipf-ish image count 500..5000 (skew tail for the salted repartition)
+    # Zipf-ish image count 500..5000 (skew tail for the doc-hash repartition)
     n_img = int(min(5000, 500 * (1.0 + rng.pareto(1.5))))
     lh = max(10, int(0.012 * H))
     y = 0.04 * H

@@ -3,8 +3,8 @@
 Stage plan (explicit shuffle boundaries, SURVEY.md §3.1 lifecycle):
 
   scan (nested documents table; column-pruned: media payloads never read)
-    -> wide-keyspace repartition on xxhash64(doc_id), heavy-tail salting
-       opt-in (salted_repartition): every partition is doc-complete
+    -> repartition on xxhash64(doc_id) over a keyspace 64x wider than
+       the partition count: every partition is doc-complete
     -> flatten (posexplode, narrow — preserves partitioning)
     -> mapInArrow(make_partition_arrow_kernel), the one driver: one Arrow
        sort of the resident partition by (doc_id, offset), one layout
@@ -37,68 +37,6 @@ from eynollah_spark.schemas import (
 #: input columns the kernel needs (the narrow projection: no payload)
 _SCAN_COLS_NARROW = ["doc_id", "width", "height", "rtl", "kind",
                      "offset", "x0", "x1", "y0", "y1"]
-
-HEAVY_QUANTILE = 0.99
-_HEAVY_SAMPLE_FRACTION = 0.02
-
-
-def salted_repartition(df: DataFrame, partitions: int, heavy_quantile: float = HEAVY_QUANTILE,
-                       heavy_threshold: int | str | None = None) -> DataFrame:
-    """Repartition documents by xxhash64(doc_id) over a wide bucket
-    keyspace; OPTIONALLY route the media-heavy tail (span count above
-    heavy_threshold) through an independent hash space (SURVEY.md §4
-    'salted repartition'; replaces the reference's fork-pool page
-    scheduling, eynollah.py:1994-2032).
-
-    heavy_threshold: None = salting OFF (r6 DEFAULT, VERDICT r5 item 2):
-    on the recorded skew bench the salted variant consistently burned
-    ~20% more executor CPU than unsalted at identical per-partition
-    balance — the heavy docs' kernel is memory-bandwidth-bound, and
-    SPREADING them raises the number of heavy kernels running
-    concurrently on one box, so every one of them slows down (the same
-    shared-bandwidth ceiling the e2e control hits). The r5 chunked-CC
-    kernel fix removed the superlinear pathology salting was defending
-    against, so the dense-tail default is plain wide-keyspace hashing.
-    int = static cutoff, opt in for sparse CLUMPED tails on multi-node
-    clusters where each node brings its own bandwidth; 'auto' = estimate
-    the p-`heavy_quantile` cutoff from a small TABLESAMPLE (reads a
-    fraction of the input, never a full extra pass)."""
-    if heavy_threshold is None:
-        width = 64 * partitions
-        return df.repartition(
-            2 * partitions,
-            F.pmod(F.xxhash64("doc_id"), F.lit(width)).cast("int"))
-    df = df.withColumn("_n", F.size("spans"))
-    if heavy_threshold == "auto":
-        thr = (
-            df.sample(fraction=_HEAVY_SAMPLE_FRACTION, seed=7)
-            .selectExpr(f"approx_percentile(_n, {heavy_quantile}) AS t")
-            .first()["t"]
-        )
-        heavy_threshold = int(thr if thr is not None else 1 << 30)
-    # ONE scan, ONE exchange (r5; was two filter branches + union, which
-    # scanned the input twice). r6 (ADVICE r5 / guide §2.5): bucket ids
-    # span a keyspace 64x wider than the partition count — the r5 form
-    # hashed `partitions` distinct ids into 2*partitions partitions, so
-    # by balls-in-bins ~1/e of partitions stayed EMPTY and colliding ids
-    # stacked (measured on the 1%-heavy-tail bench corpus: 100/256
-    # partitions non-empty, max/mean span load 11.6 unsalted / 8.1
-    # salted — the salted default LOST to unsalted in wall clock, r5
-    # skew artifact). With 64x ids every partition fills and max/mean
-    # drops to 6.7 unsalted / 4.6 salted. Heavy docs still draw from an
-    # independent hash (seed 1) in their own id range, so a clump of
-    # heavy docs that collides under the light hash cannot also collide
-    # under the heavy one; partitions are mixed heavy+light, and the
-    # balance comes from the id spread, not from heavy isolation.
-    width = 64 * partitions
-    bucket = F.when(
-        F.col("_n") > heavy_threshold,
-        F.lit(width) + F.pmod(F.xxhash64("doc_id", F.lit(1)), F.lit(width)),
-    ).otherwise(F.pmod(F.xxhash64("doc_id"), F.lit(width))).cast("int")
-    return (df.withColumn("_b", bucket)
-            .repartition(2 * partitions, F.col("_b"))
-            .drop("_n", "_b"))
-
 
 def filter_printspace(flat: DataFrame, frame=None,
                       margin_frac: float = 0.02,
@@ -401,7 +339,7 @@ def _distributed_partitions(spark, partitions: int | None) -> int:
 
 
 def extract(df: DataFrame, partitions: int | None = None, nested: bool = True,
-            heavy_threshold: int | str | None = None, fail_fast: bool = True,
+            fail_fast: bool = True,
             num_col_lower: int = 0, num_col_upper: int = 0,
             printspace_margin: float = 0.0) -> DataFrame:
     """documents (nested) -> ordered out_spans.
@@ -410,12 +348,20 @@ def extract(df: DataFrame, partitions: int | None = None, nested: bool = True,
     ``nested=False`` returns the flat sink shape (doc_id, ord, kind,
     text, media_ref, offset) — preferable at scale.
 
-    Plan: salted_repartition (doc-complete partitions) -> flatten ->
+    Plan: doc_id-hash repartition (doc-complete partitions) -> flatten ->
     [printspace filter, which only adds one row per document that lost
     every span] -> mapInArrow(driver); no sort stage.
     """
     partitions = _distributed_partitions(df.sparkSession, partitions)
-    flat = flatten(salted_repartition(df, partitions, heavy_threshold=heavy_threshold))
+    # Hash doc ids into a keyspace 64x wider than the partition count:
+    # hashing only `partitions` ids into 2*partitions partitions leaves
+    # ~1/e of them empty by balls-in-bins. Heavy documents are not salted
+    # into a separate hash space: measured, that won on one heavy-tail
+    # corpus and lost on another (README, "Skew is handled before the
+    # kernel").
+    width = 64 * partitions
+    flat = flatten(df.repartition(
+        2 * partitions, F.pmod(F.xxhash64("doc_id"), F.lit(width)).cast("int")))
     if printspace_margin > 0:
         # B9 page-frame filter as a pre-kernel codegen predicate (the
         # CLI's page-extraction step; --ignore-page-extraction skips it)
@@ -429,7 +375,6 @@ def extract(df: DataFrame, partitions: int | None = None, nested: bool = True,
 
 def extract_flat_input(flat: DataFrame, partitions: int | None = None,
                        strategy: str = "join",
-                       assume_doc_partitioned: bool = False,
                        fail_fast: bool = True,
                        num_col_lower: int = 0, num_col_upper: int = 0) -> DataFrame:
     """Same pipeline for already-flat span rows (FLAT_IN_FIELDS) — used
@@ -441,22 +386,15 @@ def extract_flat_input(flat: DataFrame, partitions: int | None = None,
     shuffled hash join and never crosses into Python — the wide-payload
     plan for 100 TB inputs. strategy='inline': payload strings ride
     through the driver (permuted C++-side, but they cross the
-    JVM<->python socket); on a bucketed input that is the ZERO-shuffle
-    plan: scan -> kernel -> sink.
-
-    assume_doc_partitioned: the input is already doc-complete per file
-    (an Iceberg table bucketed by doc_id, the recommended deployment) ->
-    no repartition shuffle. The caller must guarantee that no file splits
-    a document and that files are smaller than
-    spark.sql.files.maxPartitionBytes; files need not be sorted.
+    JVM<->python socket). Both strategies repartition on doc_id; the
+    zero-shuffle plan over a doc_id-bucketed table is
+    extract_from_parquet_files.
     """
     partitions = _distributed_partitions(flat.sparkSession, partitions)
     join = strategy == "join"
     emit = emit_narrow if join else emit_flat
     f = flat.select(*(_SCAN_COLS_NARROW if join else FLAT_IN_FIELDS))
-    if not assume_doc_partitioned:
-        f = f.repartition(partitions, F.xxhash64("doc_id"))
-    out = f.mapInArrow(
+    out = f.repartition(partitions, F.xxhash64("doc_id")).mapInArrow(
         make_partition_arrow_kernel(emit, fail_fast=fail_fast, num_col_lower=num_col_lower,
                                     num_col_upper=num_col_upper), schema=emit.schema)
     if not join:

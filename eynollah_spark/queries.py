@@ -82,6 +82,82 @@ def load_views(spark: SparkSession, sf_dir: str, *names: str,
         df.createOrReplaceTempView(n)
 
 
+#: live state of each materialize-once query, by name: (session, key,
+#: kept handles, per-call handles, final DataFrame)
+_MATERIALIZED: dict[str, tuple] = {}
+
+
+def _table_files_key(sf_dir: str, tables) -> tuple:
+    """(path, size, mtime_ns) of every parquet file behind the named
+    sf_dir tables, so a table rewritten under the same path gets a new
+    key."""
+    import os
+
+    key = []
+    for n in tables:
+        path = f"{sf_dir}/{n}.parquet"
+        files = ([os.path.join(path, f) for f in sorted(os.listdir(path))
+                  if f.endswith(".parquet")] if os.path.isdir(path) else [path])
+        for fp in files:
+            try:
+                st = os.stat(fp)
+                key.append((fp, st.st_size, st.st_mtime_ns))
+            except OSError:
+                key.append((fp, None, None))
+    return tuple(key)
+
+
+def _unpersist(handles) -> None:
+    # handles may belong to an already-stopped SparkSession (ADVICE r4);
+    # unpersist on a dead session raises
+    for h in handles:
+        try:
+            h.unpersist()
+        except Exception:
+            pass
+
+
+def _materialize_once(*tables: str):
+    """Decorator turning ``build(spark) -> (kept, per_call, final)`` into
+    a registry spark_fn(spark, sf_dir) that persists its intermediate
+    relations once per live session.
+
+    ``build`` registers the views it needs over the tables (already
+    loaded with the scan-parallelism floor), persists its handles and
+    returns them: ``kept`` live as long as the cache key holds (the
+    n-gram shingle relation), ``per_call`` are the intermediates of one
+    call. The key is the session, sf_dir and the size and mtime of every
+    input table file. On a hit the already-analyzed ``final`` plan is
+    returned again (re-analysis of the 128-MIN SQL text costs ~0.7 s of
+    driver time) and the per-call handles are unpersisted and persisted
+    again, so the next action recomputes them from the kept relations or
+    the input. On a miss every handle of the previous state is dropped
+    first and ``build`` runs."""
+    import functools
+
+    def deco(build):
+        @functools.wraps(build)
+        def spark_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
+            from pyspark import StorageLevel
+
+            load_views(spark, sf_dir, *tables, scan_floor=True)
+            key = (sf_dir, _table_files_key(sf_dir, tables))
+            old = _MATERIALIZED.get(build.__name__)
+            if old is not None:
+                o_spark, o_key, kept, per_call, final = old
+                _unpersist(per_call)
+                if o_spark is spark and o_key == key:
+                    for h in per_call:
+                        h.persist(StorageLevel.MEMORY_AND_DISK)
+                    return final
+                _unpersist(kept)
+            kept, per_call, final = build(spark)
+            _MATERIALIZED[build.__name__] = (spark, key, kept, per_call, final)
+            return final
+        return spark_fn
+    return deco
+
+
 def sf_of(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     return float(m.group(1)) if m else 0.01
@@ -634,7 +710,8 @@ FROM inter i JOIN sizes sa ON sa.doc_id = i.doc_a JOIN sizes sb ON sb.doc_id = i
 WHERE CAST(i.common AS DOUBLE) / (sa.n + sb.n - i.common) >= 0.5"""
 
 
-def _ngram_jaccard_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_materialize_once("documents")
+def _ngram_jaccard_spark(spark: SparkSession) -> tuple[list, list, DataFrame]:
     """MinHash-candidates + exact n-gram Jaccard, Spark side. The shingle
     relation is referenced FOUR times downstream (minhash aggregate,
     per-doc sizes, both intersection sides), and the candidate `pairs`
@@ -653,54 +730,28 @@ def _ngram_jaccard_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every statement below is therefore CTE-FREE: plain view references
     and nested subqueries, which DO substitute InMemoryTableScan.
 
-    The shingle cache is per (SparkSession, sf_dir): call 2..n in a
-    session reuse it (the bench's documented warm path — the one-time
-    tokenize is an ingest-time cost); any new session or sf_dir rebuilds
-    from the parquet input. The candidate chain and the exact-Jaccard
-    tail recompute on every call."""
+    The shingle cache lives as long as the _materialize_once key (the
+    session, sf_dir and the documents file's size and mtime): call 2..n
+    in a session reuse it (the bench's documented warm path — the
+    one-time tokenize is an ingest-time cost); a new session, sf_dir or
+    rewritten input rebuilds it from the parquet input. The candidate
+    chain and the exact-Jaccard tail recompute on every call."""
     from pyspark import StorageLevel
 
-    load_views(spark, sf_dir, "documents", scan_floor=True)
-    state = getattr(_ngram_jaccard_spark, "_state", None)
-    ds = None
-    if state is not None:
-        # unpersist the per-call intermediates unconditionally; keep the
-        # shingle cache only for the same live session + sf_dir. Handles
-        # may belong to an already-stopped SparkSession (ADVICE r4) —
-        # unpersist on a dead session raises, so guard it.
-        for h in state["tmp"]:
-            try:
-                h.unpersist()
-            except Exception:
-                pass
-        if state["spark"] is spark and state["sf"] == sf_dir:
-            # same session + input: reuse the shingle cache AND the
-            # already-analyzed plan objects (the 128-MIN SQL text costs
-            # ~0.7 s of driver-side analysis per call); re-persisting the
-            # unpersisted intermediates recomputes them from the cached
-            # shingles on the next action — only the plans are reused.
-            for h in state["tmp"]:
-                h.persist(StorageLevel.MEMORY_AND_DISK)
-            return state["final"]
-        try:
-            state["ds"].unpersist()
-        except Exception:
-            pass
-    if ds is None:
-        # NO DISTINCT here (r5): MIN is idempotent, so duplicate shingles
-        # cannot change a MinHash signature — deduping the FULL shingle
-        # relation cost a whole extra shuffle before the cache; the only
-        # consumers that need set semantics (sizes + exact intersection)
-        # get a DISTINCT on the candidate-restricted relation, which is
-        # broadcast-sized however large the corpus is.
-        ds = spark.sql(
-            f"WITH {_planted_docs_cte()},\n{_shingles_cte('spark', 'docs_nd')}\n"
-            "SELECT doc_id, sh FROM shingles")
-        # MEMORY_AND_DISK deliberately (VERDICT r4): at 100 TB the shingle
-        # relation exceeds executor memory — MEMORY_ONLY would silently
-        # evict and re-tokenize; spilling partitions to local disk keeps
-        # the materialize-once contract at any scale
-        ds.persist(StorageLevel.MEMORY_AND_DISK)
+    # NO DISTINCT here (r5): MIN is idempotent, so duplicate shingles
+    # cannot change a MinHash signature — deduping the FULL shingle
+    # relation cost a whole extra shuffle before the cache; the only
+    # consumers that need set semantics (sizes + exact intersection)
+    # get a DISTINCT on the candidate-restricted relation, which is
+    # broadcast-sized however large the corpus is.
+    ds = spark.sql(
+        f"WITH {_planted_docs_cte()},\n{_shingles_cte('spark', 'docs_nd')}\n"
+        "SELECT doc_id, sh FROM shingles")
+    # MEMORY_AND_DISK deliberately (VERDICT r4): at 100 TB the shingle
+    # relation exceeds executor memory — MEMORY_ONLY would silently
+    # evict and re-tokenize; spilling partitions to local disk keeps
+    # the materialize-once contract at any scale
+    ds.persist(StorageLevel.MEMORY_AND_DISK)
     ds.createOrReplaceTempView("_jacc_ds")
 
     # candidate pairs: the minhash chain of _minhash_chain_cte, written
@@ -765,9 +816,7 @@ JOIN (SELECT doc_id, COUNT(*) AS n FROM _jacc_dsc GROUP BY doc_id) sa
 JOIN (SELECT doc_id, COUNT(*) AS n FROM _jacc_dsc GROUP BY doc_id) sb
   ON sb.doc_id = i.doc_b
 WHERE CAST(i.common AS DOUBLE) / (sa.n + sb.n - i.common) >= 0.5""")
-    _ngram_jaccard_spark._state = {"spark": spark, "sf": sf_dir, "ds": ds,
-                                   "tmp": [pairs, dsc], "final": final}
-    return final
+    return [ds], [pairs, dsc], final
 
 
 _fn("dedup_ngram_jaccard", ("documents",), _ngram_jaccard_spark, duck_sql=f"""
@@ -1217,7 +1266,8 @@ WHERE rk <= 5
 """
 
 
-def _ann_topk_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_materialize_once("embeddings")
+def _ann_topk_spark(spark: SparkSession) -> tuple[list, list, DataFrame]:
     """Spark side of sim_ann_topk (same candidate set / sims as
     _ann_topk_sql('spark'), which stays the DuckDB oracle): the emb
     projection and the 6-table LSH bucket projection are materialized
@@ -1228,18 +1278,6 @@ def _ann_topk_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     evaluated once per vector instead of once per pair side."""
     from pyspark import StorageLevel
 
-    load_views(spark, sf_dir, "embeddings", scan_floor=True)
-    state = getattr(_ann_topk_spark, "_state", None)
-    if state is not None:
-        for h in state["tmp"]:
-            try:
-                h.unpersist()
-            except Exception:
-                pass
-        if state["spark"] is spark and state["sf"] == sf_dir:
-            for h in state["tmp"]:
-                h.persist(StorageLevel.MEMORY_AND_DISK)
-            return state["final"]
     emb = spark.sql("""
 SELECT vec_id, v,
        SQRT(aggregate(v, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x * x)) AS nrm
@@ -1275,9 +1313,7 @@ FROM (SELECT query_id, vec_id, sim,
         JOIN _ann_emb eq ON eq.vec_id = c.query_id
         JOIN _ann_emb ev ON ev.vec_id = c.vec_id) scored)
 WHERE rk <= 5""")
-    _ann_topk_spark._state = {"spark": spark, "sf": sf_dir,
-                              "tmp": [emb, tabs], "final": final}
-    return final
+    return [], [emb, tabs], final
 
 
 _fn("sim_ann_topk", ("embeddings",), _ann_topk_spark,
@@ -1290,7 +1326,8 @@ _fn("sim_ann_topk", ("embeddings",), _ann_topk_spark,
 # deterministic candidate set, so the oracle comparison is exact.
 
 
-def _emb_nd_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_materialize_once("embeddings")
+def _emb_nd_spark(spark: SparkSession) -> tuple[list, list, DataFrame]:
     """Spark side of dedup_embedding_neardup, restructured for plan
     shape (same candidate set and sims as _emb_nd_sql('spark'), which
     remains the DuckDB oracle's form):
@@ -1312,20 +1349,6 @@ def _emb_nd_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
       applies to the unrounded value exactly as the SQL form does."""
     from pyspark import StorageLevel
 
-    load_views(spark, sf_dir, "embeddings", scan_floor=True)
-    state = getattr(_emb_nd_spark, "_state", None)
-    if state is not None:
-        for h in state["tmp"]:
-            try:
-                h.unpersist()
-            except Exception:
-                pass
-        if state["spark"] is spark and state["sf"] == sf_dir:
-            # reuse the analyzed plan objects only: the re-persisted
-            # handles recompute from the parquet input on the next action
-            for h in state["tmp"]:
-                h.persist(StorageLevel.MEMORY_AND_DISK)
-            return state["final"]
     emb = spark.sql("""
 SELECT vec_id, v,
        SQRT(aggregate(v, CAST(0.0 AS DOUBLE), (acc, x) -> acc + x * x)) AS nrm
@@ -1361,9 +1384,7 @@ FROM (
   JOIN _embnd ea ON ea.vec_id = c.vec_a
   JOIN _embnd eb ON eb.vec_id = c.vec_b) s
 WHERE sim >= 0.9""")
-    _emb_nd_spark._state = {"spark": spark, "sf": sf_dir,
-                            "tmp": [emb, cand], "final": final}
-    return final
+    return [], [emb, cand], final
 
 
 _fn("dedup_embedding_neardup", ("embeddings",), _emb_nd_spark,

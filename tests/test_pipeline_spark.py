@@ -95,17 +95,23 @@ def test_entry_points_agree(spark, corpus, tmp_path):
         assert sorted(map(tuple, df.select(_OUT_COLS).collect())) == ref, name
 
 
-def test_salted_repartition_isolates_heavy_tail(spark, corpus):
-    from eynollah_spark.pipeline import salted_repartition
-
+def test_output_invariant_to_parallelism(spark, corpus):
+    """The reading order is a per-document function, so the partition
+    count must not change a single output row: extract at 1, 3 and 8
+    partitions and extract_flat_input (join) at 1 and 8 all give the
+    same (doc_id, ord, kind, text, media_ref, offset) multiset."""
     docs = nest_corpus(corpus)
-    rep = salted_repartition(docs, partitions=8, heavy_threshold=400)
-    # partition weights: no partition may hold more than ~half the heavy docs
-    pw = rep.select(F.spark_partition_id().alias("pid"), F.size("spans").alias("n"))
-    heavy = pw.filter(F.col("n") > 400).groupBy("pid").count().collect()
-    n_heavy = sum(r["count"] for r in heavy)
-    if n_heavy >= 4:
-        assert max(r["count"] for r in heavy) <= max(1, n_heavy - 1)
+    flat = corpus.drop("expected_kind", "expected_rank")
+    outs = {f"extract_p{p}": extract(docs, partitions=p, nested=False) for p in (1, 3, 8)}
+    outs.update({f"flat_input_join_p{p}": extract_flat_input(flat, partitions=p,
+                                                             strategy="join")
+                 for p in (1, 8)})
+    rows = {name: sorted(map(tuple, df.select(_OUT_COLS).collect()))
+            for name, df in outs.items()}
+    ref = rows.pop("extract_p8")
+    assert len(ref) == expected_spark(corpus).count()
+    for name, got in rows.items():
+        assert got == ref, name
 
 
 def test_manifest_resume(spark, corpus, tmp_path_factory):
@@ -285,31 +291,3 @@ def test_expected_check_kernel_equals_join_check(spark, corpus):
     assert k_tot == j_tot
     assert k_map == j_map
 
-
-def test_salting_default_off_matches_forced_off(spark, corpus):
-    """r6 decision rule (VERDICT r5 item 2, option b): the DEFAULT
-    repartition is unsalted — identical row routing to the forced-off
-    threshold=2^30 form (the frozen bench's 'unsalted' leg), no
-    size(spans) evaluation in the plan — while an explicit threshold
-    still opts in to the heavy branch."""
-    from eynollah_spark.corpus import nest_corpus
-    from eynollah_spark.pipeline import salted_repartition
-
-    docs = nest_corpus(corpus)
-    default = salted_repartition(docs, partitions=8)
-    forced_off = salted_repartition(docs, partitions=8, heavy_threshold=1 << 30)
-    p_def = default._jdf.queryExecution().executedPlan().toString()
-    p_in = docs._jdf.queryExecution().executedPlan().toString()
-    assert "size(spans" not in p_def
-    # exactly ONE exchange beyond whatever the nested input itself needs
-    assert p_def.count("Exchange") == p_in.count("Exchange") + 1
-    # same rows land in the same partition ids under both forms
-    a = (default.select("doc_id", F.spark_partition_id().alias("p"))
-         .orderBy("doc_id").collect())
-    b = (forced_off.select("doc_id", F.spark_partition_id().alias("p"))
-         .orderBy("doc_id").collect())
-    assert a == b
-    # opt-in still salts: heavy docs take the independent hash space
-    opted = salted_repartition(docs, partitions=8, heavy_threshold=400)
-    p_opt = opted._jdf.queryExecution().executedPlan().toString()
-    assert "size(spans" in p_opt

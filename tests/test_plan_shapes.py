@@ -61,7 +61,9 @@ def test_extraction_plan_has_single_shuffle(spark):
 def test_extract_plan_has_no_sort_and_no_pandas(spark, tmp_path):
     """extract() establishes the (doc_id, offset) order inside its one
     Arrow driver: neither output mode may plan a Sort node (a
-    sortWithinPartitions stage) or a MapInPandas stage."""
+    sortWithinPartitions stage) or a MapInPandas stage. Its one shuffle
+    is the doc_id-hash repartition (the parquet input brings no exchange
+    of its own), and no span count (size(spans)) steers it."""
     import re
 
     from eynollah_spark.corpus import corpus_flat_spark, nest_corpus
@@ -75,6 +77,8 @@ def test_extract_plan_has_no_sort_and_no_pandas(spark, tmp_path):
         assert re.search(r"\bSort\b", p) is None, p
         assert "MapInPandas" not in p, p
         assert "MapInArrow" in p, p
+        assert p.count("Exchange") == 1, p
+        assert "size(spans" not in p, p
 
 
 def test_whole_stage_codegen_active(spark):

@@ -7,9 +7,11 @@ values. Usage: python tools/check_oracle.py [sf_dir] [name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this file belongs to, wherever it lives
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 import numpy as np
